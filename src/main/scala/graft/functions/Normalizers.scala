@@ -87,7 +87,14 @@ object Normalizers {
     * data; documented divergence.)
     */
   def isValidIssn(c: Column): Column =
-    c.isNotNull && c.rlike("^[0-9]{4}.[0-9]{3}[0-9X]$")
+    c.isNotNull && c.rlike(IssnRegex)
+
+  /** The [[isValidIssn]] format, shared with the native
+    * [[graft.plans.IssnSet]] (which applies it with `find()`, as
+    * `rlike` does).
+    */
+  val IssnRegex = "^[0-9]{4}.[0-9]{3}[0-9X]$"
+  val IssnPattern: java.util.regex.Pattern = java.util.regex.Pattern.compile(IssnRegex)
 
   /** Strip HTML/XML tags, keep text (crossref abstract cleanup,
     * distiller/abstract.py:47-63 — BeautifulSoup get_text re-expressed

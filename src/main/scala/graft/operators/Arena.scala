@@ -43,13 +43,13 @@ object Arena {
     * Hunter's MM update p_i ← W_i / Σ_j n_ij/(p_i+p_j), renormalized
     * each round to mean 1 (the model is scale-free). Ties are dropped
     * (decided games only, the classical BT likelihood); contenders
-    * with no decided games are excluded. All-double arithmetic with
-    * one 4dp round at the very end — the iteration count is fixed, so
-    * both engines run the identical float recursion.
+    * with no decided games are excluded, and a NULL win count counts
+    * as 0. All-double arithmetic with one 4dp round at the very end —
+    * the iteration count is fixed, so both engines run the identical
+    * float recursion.
     *
-    * Everything after [[winMatrix]] is roster-bounded; the loop is a
-    * fixed unroll of broadcast-sized joins (same posture as the BPE
-    * merge induction: bounded driver-free rounds).
+    * Everything after [[winMatrix]] is roster-bounded, so the loop runs
+    * on the driver over one collect of the matrix (below).
     */
   def bradleyTerry(matrix: DataFrame, iters: Int): DataFrame = {
     // The win matrix is ROSTER-bounded (≤ T² rows for T contenders — a
@@ -66,7 +66,8 @@ object Arena {
     val spark = matrix.sparkSession
     val mType = matrix.schema("a").dataType
     val rows = matrix
-      .select(col("a"), col("b"), col("wins_a").cast("long"), col("wins_b").cast("long"))
+      .select(col("a"), col("b"),
+        coalesce(col("wins_a").cast("long"), lit(0L)), coalesce(col("wins_b").cast("long"), lit(0L)))
       .collect()
     // symmetric decided-games view: (i, j, w_i, n_ij) both directions
     val sym = rows.flatMap { r =>

@@ -82,16 +82,13 @@ object CoreQueries {
     },
 
     // #8 keep-newest-per-key window ≈ deduplicate.merge_pubs survivor pick
-    // (sort by updated_at desc, keep first). Partition-local sort only.
+    // (sort by updated_at desc, keep first), through Rialto.keepNewest.
     "q_dedupe_keep_newest" -> { (s, dir) =>
       // The synthetic lineitem has duplicate (orderkey, linenumber) pairs
       // by design; l_quantity joins the sort so the survivor row is
       // deterministic over the projected columns.
-      val w = Window.partitionBy("l_orderkey").orderBy(col("l_linenumber").desc, col("l_quantity").desc)
-      Tables(s, dir).lineitem
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("l_orderkey", "l_linenumber", "l_quantity")
+      val li = Tables(s, dir).lineitem.select("l_orderkey", "l_linenumber", "l_quantity")
+      Rialto.keepNewest(li, Seq("l_orderkey"), Seq(col("l_linenumber"), col("l_quantity")))
     },
 
     // #9 top-K per group with deterministic tiebreak.

@@ -10,8 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * The reference walks an ordered rule list per row in Python; here each
   * rule is a Column expression and the precedence collapses into a single
-  * `coalesce`, so the whole distillation of a 100 TB table is one
-  * codegen'd projection — no UDF, no per-row interpreter.
+  * `coalesce`, so a distillation is one projection with no UDF. It is
+  * codegen'd except where a rule takes a lambda ([[allValid]],
+  * [[openAccess]] here; the lambda rules listed on [[Distillers]]):
+  * Spark runs higher-order functions in the interpreter, with every
+  * expression inlined beneath them. Hot rules get a native expression,
+  * as `Distillers.journalIssn` does with [[graft.plans.IssnSet]].
   */
 object Distill {
 

@@ -15,10 +15,11 @@ import graft.sources.Tables
   * lookup realization of journal_name/publisher, and the APC
   * ISSN×year dataset lookup (distiller/apc.py:48-59).
   *
-  * Every query is a single codegen'd projection (plus one broadcast
-  * join where the reference calls an external lookup) — the shape a
-  * 100 TB distillation run needs: no UDFs, no per-row interpreter,
-  * JSON parsed at most once per source.
+  * Every query is a single projection (plus one broadcast join where
+  * the reference calls an external lookup) — the shape a 100 TB
+  * distillation run needs: no UDFs, JSON parsed at most once per
+  * source. The projection is codegen'd except for the lambda rules
+  * listed on [[Distillers]], which Spark interprets.
   */
 object DistillerQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -104,9 +105,9 @@ object DistillerQueries {
             (col("openalex_json.biblio.volume"), true), (col("dim_json.volume"), false),
             (col("pubmed_json.volume"), true), (col("sulpub_json.journal.volume"), true)).as("volume"),
           Distillers.journalIssn(
-            Distillers.one(col("openalex_json.issn_l")), col("openalex_json.issn"),
-            Distillers.one(col("sulpub_json.issn")), col("dim_json.issn"),
-            col("crossref_json.issn"), Distillers.one(col("pubmed_json.issn_text"))).as("journal_issn")
+            col("openalex_json.issn_l"), col("openalex_json.issn"),
+            col("sulpub_json.issn"), col("dim_json.issn"),
+            col("crossref_json.issn"), col("pubmed_json.issn_text")).as("journal_issn")
         )
     },
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Normalizers
+import graft.plans.IssnSet
 
 /** The reference's concrete per-field distillation chains
   * (/root/reference/rialto_airflow/distiller/{title,pub_year,issue,
@@ -13,8 +14,15 @@ import graft.functions.Normalizers
   * Each source argument is the *parsed* form of that source's JSON
   * (one `from_json` per source, then every rule reads struct fields —
   * JSON cost never multiplies with the number of rules). All chains are
-  * pure Column expressions: a 100 TB distillation is one codegen'd
-  * projection, no UDF, no per-row interpreter.
+  * Column expressions, no UDF, and most compile into one codegen'd
+  * projection. The rules that take a lambda — [[wosTitle]],
+  * [[journalName]], [[citationCount]], [[authorListNames]],
+  * [[pubmedAbstract]], [[joinedNames]], [[pubmedOrcids]] and
+  * [[authorListOrcids]] — are higher-order functions, which Spark does
+  * not compile: each runs row by row in the interpreter, together with
+  * every candidate expression inlined beneath it. A rule that turns out
+  * hot gets a native expression instead; [[journalIssn]] over
+  * [[graft.plans.IssnSet]] is the pattern to follow.
   */
 object Distillers {
 
@@ -166,18 +174,16 @@ object Distillers {
   /** journal_issn.py — collect ALL rule matches (openalex issn_l,
     * openalex issn list, sulpub issn, dim issn list, crossref ISSN
     * list, pubmed Journal.ISSN.#text), keep the format-valid ones,
-    * dedupe, sort, pipe-join; NULL when none survive. Scalars and
-    * lists mix freely: scalars arrive wrapped as 1-element arrays via
-    * [[one]].
+    * dedupe, sort, pipe-join; NULL when none survive. Candidates are
+    * `string` or `array<string>` and mix freely; one codegen'd
+    * [[graft.plans.IssnSet]].
     */
-  def journalIssn(candidates: Column*): Column = {
-    val all = concat(candidates.map(c => coalesce(c, array().cast("array<string>"))): _*)
-    val uniq = array_sort(array_distinct(filter(all, Normalizers.isValidIssn _)))
-    when(size(uniq) > 0, array_join(uniq, "|"))
-  }
+  def journalIssn(candidates: Column*): Column = IssnSet(candidates: _*)
 
-  /** Wrap a scalar candidate for [[journalIssn]]. */
-  def one(c: Column): Column = filter(array(c), x => x.isNotNull)
+  /** A scalar candidate as a 1-element list rule hit; NULL (a miss)
+    * when the scalar is NULL.
+    */
+  def one(c: Column): Column = when(c.isNotNull, array(c))
 
   /** journal_name.py — the display_name of the first OpenAlex location
     * whose source.type == "journal"; otherwise the ISSN-lookup value

@@ -17,12 +17,20 @@ import graft.functions.Normalizers
 object Rialto {
 
   /** merge_pubs survivor pick (deduplicate.py:187-217): one row per key,
-    * newest first by `newestBy` (descending, with the caller providing
-    * enough columns for determinism).
+    * newest first by `newestBy` (descending, NULLs last, with the
+    * caller providing enough columns for determinism).
+    *
+    * The input is [[Par.spread]] by the keys first. On an unsplittable
+    * scan that keyed exchange is the window's only shuffle (it already
+    * satisfies the window's distribution), so the sort and the partial
+    * group limit run in parallel after it — otherwise Spark plans the
+    * partial WindowGroupLimit on the map side, one task over the whole
+    * scan. Where the scan splits, the spread is a no-op.
     */
   def keepNewest(df: DataFrame, keys: Seq[String], newestBy: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(newestBy.map(_.desc): _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    Par.spread(df, keys.map(col): _*)
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Duplicate-group merge: groupBy the dup key, keep the max "payload"

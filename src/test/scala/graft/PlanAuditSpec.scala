@@ -54,7 +54,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("distill field/abstract chains are map-only plans (no required shuffles)") {
     // r14: the heavy distill chains widen an unsplittable single-
-    // row-group scan with ONE explicit Par.spread round-robin exchange
+    // row-group scan with ONE explicit Par.spread keyed exchange
     // (REPARTITION_BY_NUM — interleaved A/B: q_distill_fields wall
     // floor 1.50 -> 0.49 s; at production scale the guard makes it a
     // no-op). No OTHER exchange may appear: an ENSURE_REQUIREMENTS
@@ -67,6 +67,19 @@ class PlanAuditSpec extends SparkSpec {
         s"$name has a non-spread shuffle ($exchanges exchanges, $spreads spreads): $s")
       assert(countOp(s, "BroadcastExchange") == 0, s"$name joins: $s")
     }
+  }
+
+  test("q_distill_fields computes journal_issn with no higher-order function") {
+    // filter/array_sort lambdas are CodegenFallback: under one, the whole
+    // inlined candidate subtree would run in the interpreter
+    import org.apache.spark.sql.catalyst.expressions.{Alias, HigherOrderFunction}
+    val plan = SparkEntry.queries("q_distill_fields")(spark, sfDir).queryExecution.optimizedPlan
+    val issn = plan.flatMap(_.expressions).flatMap(_.collect {
+      case a: Alias if a.name == "journal_issn" => a
+    })
+    assert(issn.size == 1, plan.toString)
+    assert(!issn.head.exists(_.isInstanceOf[HigherOrderFunction]), issn.head.toString)
+    assert(issn.head.exists(_.isInstanceOf[graft.plans.IssnSet]), issn.head.toString)
   }
 
   test("curation scan queries are single-pass map-only plans (zero shuffles)") {

@@ -229,4 +229,66 @@ class PlansSpec extends SparkSpec {
       assert(math.abs(got - want) < 1e-12, s"eval($a, $b) = $got, want $want")
     }
   }
+
+  test("IssnSet equals the HOF journal_issn chain, codegen'd and interpreted") {
+    import graft.functions.Normalizers
+    import graft.operators.Distillers
+    import graft.plans.IssnSet
+    // the chain IssnSet replaced, scalars wrapped by a null-dropping filter
+    def hofOne(c: org.apache.spark.sql.Column) = filter(array(c), x => x.isNotNull)
+    def hofChain(cs: org.apache.spark.sql.Column*) = {
+      val all = concat(cs.map(c => coalesce(c, array().cast("array<string>"))): _*)
+      val uniq = array_sort(array_distinct(filter(all, Normalizers.isValidIssn _)))
+      when(size(uniq) > 0, array_join(uniq, "|"))
+    }
+    val sorted = "1234 5678|1234-5678|1234\u00e95678|1234\u20135678|1234\uff0d5678|1234\ud83d\ude005678"
+    val rows: Seq[(String, String, Seq[String], Seq[String])] = Seq(
+      (null, null, null, null),
+      (null, null, Seq(), Seq()),
+      ("1234-5678", null, Seq(null, "1234-5678", "1234-5678"), Seq(null)),
+      // the separator is any one character; lowercase x is not a check digit
+      ("1234 5678", "1234X5678", Seq("12345678", "123-45678", "1234-567X"), Seq("1234-567x")),
+      ("x1234-5678", "1234-56789", Seq("1234-5678 ", " 1234-5678"), null),
+      // `$` matches before one final line terminator; `.` is no terminator
+      ("1234-5678\n", "1234-5678\n\n", Seq("\n1234-5678", "1234-5678\r\n"), Seq("1234\n5678")),
+      // [0-9] is ASCII only
+      ("\u0661\u0662\u0663\u0664-\u0665\u0666\u0667\u0668", "\uff11\uff12\uff13\uff14-5678",
+        Seq("1234-\u0665\u0666\u0667\u0668"), null),
+      // multi-byte separators: unsigned UTF-8 byte order, where UTF-16
+      // order would put the surrogate pair before U+FF0D
+      ("1234\uff0d5678", "1234\ud83d\ude005678",
+        Seq("1234\u00e95678", "1234\u20135678", "1234 5678", "1234-5678"), Seq("1234\ud83d\ude005678"))
+    )
+    val dir = java.nio.file.Files.createTempDirectory("issnset").resolve("t").toString
+    // through parquet, so no local-relation folding evaluates the projection
+    rows.toDF("s1", "s2", "l1", "l2").coalesce(1).write.parquet(dir)
+    val cases = spark.read.parquet(dir)
+    val modes = Seq(
+      Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.fallback" -> "false"),
+      Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"))
+    for (mode <- modes) {
+      val before = mode.map { case (k, _) => k -> spark.conf.getOption(k) }
+      mode.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val out = cases.select(
+          IssnSet(col("s1"), col("l1"), col("s2"), col("l2")).as("fast"),
+          Distillers.journalIssn(Distillers.one(col("s1")), col("l1"),
+            Distillers.one(col("s2")), col("l2")).as("wrapped"),
+          hofChain(hofOne(col("s1")), col("l1"), hofOne(col("s2")), col("l2")).as("ref")
+        ).collect().map(r => (Option(r.getString(0)), Option(r.getString(1)), Option(r.getString(2))))
+        assert(out.length == rows.length)
+        for ((fast, wrapped, ref) <- out)
+          assert(fast == ref && wrapped == ref, s"$mode: fast=$fast wrapped=$wrapped ref=$ref")
+        // rows 1, 2, 5 and 7 have no valid candidate
+        assert(out.count(_._3.isEmpty) == 4, s"$mode: ${out.toSeq}")
+        assert(out.exists(_._3.contains(sorted)), s"$mode: ${out.toSeq}")
+        assert(out.exists(_._3.exists(_.startsWith("1234-5678\n|"))), s"$mode: ${out.toSeq}")
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
 }

@@ -37,6 +37,19 @@ class R14OptSpec extends SparkSpec {
     assert(out.select("m").as[String].collect().sorted === Array("a", "b"))
   }
 
+  test("bradleyTerry counts NULL wins as 0") {
+    val nulls = Seq[(String, String, Option[Long], Option[Long])](
+      ("a", "b", Some(3L), None), ("b", "c", None, None), ("a", "c", None, Some(2L))
+    ).toDF("a", "b", "wins_a", "wins_b")
+    val zeros = Seq(("a", "b", 3L, 0L), ("b", "c", 0L, 0L), ("a", "c", 0L, 2L))
+      .toDF("a", "b", "wins_a", "wins_b")
+    def rows(m: org.apache.spark.sql.DataFrame) =
+      Arena.bradleyTerry(m, iters = 3).collect().map(_.toString).sorted
+    val out = rows(nulls)
+    assert(out === rows(zeros))
+    assert(out.length == 3)
+  }
+
   test("mahalanobisScreen struct-argmax keeps the min-id-among-max tiebreak") {
     // Points symmetric about the mean have identical d2 (quadratic
     // form in centered coordinates), so (4,7) and (-4,-7) tie for the

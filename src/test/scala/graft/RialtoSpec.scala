@@ -46,4 +46,37 @@ class RialtoSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
     assert(out == Set((1L, "new"), (2L, "only")))
   }
+
+  test("keepNewest breaks ties on later columns and sorts NULLs last") {
+    val df = Seq[(Long, Option[Int], String)](
+      (1L, Some(5), "a"), (1L, Some(5), "b"), (1L, None, "z"),   // tie on ver: tag decides
+      (2L, None, "x"), (2L, Some(1), "y"),                         // NULL ver loses
+      (3L, None, "p"), (3L, None, "q")                             // all NULL: tag decides
+    ).toDF("k", "ver", "tag")
+    val out = Rialto.keepNewest(df, Seq("k"), Seq(col("ver"), col("tag")))
+      .collect().map(r => (r.getLong(0), r.getString(2))).toSet
+    assert(out == Set((1L, "b"), (2L, "y"), (3L, "q")))
+  }
+
+  test("keepNewest on multi-partition input keeps one newest row per key") {
+    val rows = (0 until 400).map(i => (i % 37L, i, s"t$i"))
+    val df = rows.toDF("k", "ver", "tag").repartition(5)
+    val out = Rialto.keepNewest(df, Seq("k"), Seq(col("ver")))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(out == rows.groupBy(_._1).map { case (k, g) => (k, g.map(_._2).max) }.toSet)
+  }
+
+  test("q_dedupe_keep_newest plans one exchange with no WindowGroupLimit below it") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+    val df = SparkEntry.queries("q_dedupe_keep_newest")(spark, sfDir)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exchanges = plan.collect { case e: Exchange => e }
+    assert(exchanges.size == 1, plan.toString)
+    assert(!exchanges.head.exists(_.isInstanceOf[WindowGroupLimitExec]), plan.toString)
+  }
 }

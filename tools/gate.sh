@@ -20,9 +20,15 @@ cd "$(dirname "$0")/.."
 SFDIR="${1:?usage: tools/gate.sh <sfdir> [outdir]}"
 OUTDIR="${2:-/tmp/graft_gate_out}"
 
+# Sized to the host the way the tier-1 test command is: heap = half of
+# MemTotal clamped to 2-8 GiB, local[nproc] unless SPARK_GRAFT_CPUS is set.
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  2>/dev/null </proc/meminfo || echo 2g)"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+
 rm -rf "$OUTDIR"
-echo "== gate stage 1: graft.Verify $SFDIR -> $OUTDIR"
-java -Xmx64g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+echo "== gate stage 1: graft.Verify $SFDIR -> $OUTDIR (heap $HEAP, $SPARK_GRAFT_CPUS cpus)"
+java -Xmx"$HEAP" -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SFDIR" "$OUTDIR" || exit 1
 
 echo "== gate stage 2: driver-calibrated DuckDB oracle compare"
